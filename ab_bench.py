@@ -12,7 +12,7 @@ and per-pair ratios.  Contamination then hits both sides roughly
 equally instead of accumulating into whichever side ran later.
 
     python ab_bench.py --ref <git-ref> --keys k1,k2 [--pairs 3]
-                       [--runs 3] [--cpus-a 32] [--cpus-b 32]
+                       [--runs 3] [--cpus-a N] [--cpus-b N]
                        [--out ab_result.json]
 
 Side B runs in a disposable `git worktree` of the ref under /tmp; the
@@ -116,7 +116,9 @@ def main() -> None:
     ap.add_argument("--keys", required=True, help="comma list of bench keys")
     ap.add_argument("--pairs", type=int, default=3)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--cpus-a", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument(
+        "--cpus-a", default=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    )
     ap.add_argument("--cpus-b", default=None, help="default: same as --cpus-a")
     ap.add_argument("--out", default=None, help="JSON result sidecar path")
     args = ap.parse_args()

@@ -209,3 +209,129 @@ def test_snapshot_old_copy_recovered_after_crash(spark, tmp_path):
     os.rename(qpath, qpath + "__old")
     q.add_post(43)
     assert q.get_total_records() == 2
+
+
+def _jobs_in(spark, group, fn):
+    """Spark jobs started while ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_facade_writes_commit_in_few_jobs_without_python_workers(
+    spark, tmp_path, monkeypatch
+):
+    """A facade write into a populated table costs one scalar id
+    aggregate plus the commit itself: insert_all <= 4 Spark jobs (9 when
+    the rows were pickled and numbered by windows), upsert <= 5 (11-15).
+    The new rows reach the JVM as an Arrow batch, so the commit plan has
+    no pickled ``Scan ExistingRDD`` and starts no Python worker."""
+    from wpvectordb_spark.operators import table_ops as TO
+
+    path = str(tmp_path / "vectors")
+    TO.derive(
+        spark.range(400).select(
+            (F.col("id") + 1).alias("id"),
+            (F.col("id") % 100).alias("post_id"),
+            (F.col("id") / 100).cast("int").alias("sequence_no"),
+            F.array(*[F.sin(F.col("id") + k).cast("float") for k in range(4)]).alias(
+                "vector"
+            ),
+        )
+    ).write.parquet(path)
+    vt = VectorTable(spark, path, vector_length=4)
+    plans = []
+    write = VectorTable._write
+
+    def spy(self, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        write(self, df)
+
+    monkeypatch.setattr(VectorTable, "_write", spy)
+    vecs = [[0.1, 0.2, 0.3, 0.4], [0.5, 0.6, 0.7, 0.8], [1.0, 0.0, 1.0, 0.0]]
+    assert 1 <= _jobs_in(spark, "facade-insert-all", lambda: vt.insert_all(7, vecs)) <= 4
+    assert 1 <= _jobs_in(spark, "facade-upsert-new", lambda: vt.upsert(500, 0, vecs[0])) <= 5
+    assert 1 <= _jobs_in(spark, "facade-upsert-old", lambda: vt.upsert(8, 2, vecs[1])) <= 5
+    assert len(plans) == 3
+    for plan in plans:
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+    got = {(r["post_id"], r["sequence_no"]): r["id"] for r in vt.df().collect()}
+    assert len(got) == 400 - 4 + 3 + 1
+    assert [got[(7, s)] for s in range(3)] == [401, 402, 403]
+    assert got[(500, 0)] == 404
+    assert got[(8, 2)] == 209  # a replaced key keeps its id
+
+
+def _unnumbered_snapshot(spark, path):
+    """A snapshot holding rows with NULL ``id``: ``table_ops.derive``
+    output written without an id column (as a pipeline outside the facade
+    would), next to one numbered row.  Read through VECTOR_TABLE_SCHEMA,
+    the id-less file's rows come back unnumbered."""
+    from wpvectordb_spark.operators import table_ops as TO
+
+    raw = "post_id long, sequence_no int, vector array<float>"
+    TO.derive(
+        spark.createDataFrame([(10, 1, 0, [1.0, 1.0])], "id long, " + raw)
+    ).write.parquet(path)
+    TO.derive(
+        spark.createDataFrame(
+            [
+                (5, 1, [0.0, 1.0]),
+                (5, 0, [1.0, 0.0]),
+                (None, 0, [2.0, 0.0]),
+                (2, 3, [0.0, 2.0]),
+            ],
+            raw,
+        )
+    ).write.mode("append").parquet(path)
+
+
+def test_writes_number_an_unnumbered_snapshot(spark, tmp_path):
+    """Fallback numbering: when stored rows lack ids, a write numbers the
+    stored and the new unnumbered rows together, contiguous from
+    max(id) + 1 in (post_id nulls first, sequence_no) order."""
+    path = str(tmp_path / "v")
+    vt = VectorTable(spark, path, vector_length=2)
+    ids = lambda: {(r["post_id"], r["sequence_no"]): r["id"] for r in vt.df().collect()}
+
+    _unnumbered_snapshot(spark, path)
+    vt.insert_all(5, [[3.0, 3.0]])
+    assert ids() == {(1, 0): 10, (None, 0): 11, (2, 3): 12, (5, 0): 13}
+
+    vt.drop_table()
+    _unnumbered_snapshot(spark, path)
+    vt.upsert(2, 3, [4.0, 4.0])  # replaces a stored unnumbered key
+    assert ids() == {(1, 0): 10, (None, 0): 11, (2, 3): 12, (5, 0): 13, (5, 1): 14}
+    vt.upsert(8, 0, [5.0, 5.0])  # snapshot now fully numbered
+    assert ids()[(8, 0)] == 15
+
+
+def test_insert_all_edge_inputs(spark, tmp_path):
+    """An empty batch still deletes every chunk of the post; integers,
+    NaN and values outside float32 range store as Java's
+    ``Double.floatValue`` gives them (round to nearest, overflow to
+    +-inf, underflow to 0 or a subnormal, NaN kept)."""
+    import math
+
+    import numpy as np
+
+    vt = VectorTable(spark, str(tmp_path / "v"), vector_length=9)
+    vt.init()
+    odd = [1, -3, 2**24 + 1, float("nan"), 1e40, -1e40, 1e-50, 1e-40, 0.1]
+    vt.insert_all(1, [[0.5] * 9, [0.25] * 9])
+    vt.insert_all(2, [odd])
+    vt.insert_all(1, [])
+    assert vt.get_all_for_post(1).count() == 0
+    (row,) = vt.get_all_for_post(2).collect()
+    with np.errstate(over="ignore"):
+        want = [float(np.float32(float(x))) for x in odd]
+    assert want[2] == 16777216.0 and want[4] == math.inf and want[6] == 0.0
+    got = row["vector"]
+    assert len(got) == len(want)
+    for g, w in zip(got, want):
+        assert (math.isnan(g) and math.isnan(w)) or g == w
+    assert row["id"] == 3

@@ -384,13 +384,6 @@ def lsh_band_keys(signature: Column | str, bands: int, rows_per_band: int) -> Co
     )
 
 
-def sql_lsh_band_keys(signature: str, bands: int, rows_per_band: int) -> str:
-    return (
-        f"list_transform(range(0, {bands}), b -> array_to_string("
-        f"({signature})[b*{rows_per_band}+1 : b*{rows_per_band}+{rows_per_band}], '-'))"
-    )
-
-
 # --- SimHash -----------------------------------------------------------------
 
 def simhash(hashes: Column | str, bits: int = 32) -> Column:

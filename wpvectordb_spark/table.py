@@ -19,6 +19,7 @@ import datetime as _dt
 import os
 import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,36 +222,90 @@ class VectorTable:
         vector_type: str = "",
     ) -> None:
         self._check_length(vector)
-        new = self.spark.createDataFrame(
-            [(int(post_id), int(sequence_no), [float(x) for x in vector], vector_type)],
-            "post_id long, sequence_no int, vector array<float>, vector_type string",
-        )
-        merged = TO.upsert(self.df(), new)
-        self._write(self._with_ids(merged))
+        table = self.df()
+        # upsert keeps every stored row: a replaced key keeps its id
+        # through table_ops.upsert's carry, a new key takes max(id) + 1
+        first_id = self._next_id(table)
+        new = self._new_rows(post_id, [sequence_no], [vector], first_id, vector_type)
+        self._commit(TO.upsert(table, new), first_id)
 
     def insert_all(self, post_id: int, vectors: list[list[float]]) -> None:
+        """C8 (VectorTable.php:401-425): replace every chunk of
+        ``post_id`` with ``vectors``, numbered 0..n-1.
+
+        Four Spark jobs and no Python worker: the new rows go to the JVM
+        as one Arrow batch, and one scalar aggregate over the rows the
+        write keeps resolves their ids on the driver (``_next_id``), so
+        the commit plan is table_ops.insert_all over two local inputs.
+        Only a snapshot that already holds unnumbered rows takes the
+        ``_with_ids`` window numbering instead."""
         for v in vectors:
             self._check_length(v)
-        new = self.spark.createDataFrame(
-            [
-                (int(post_id), i, [float(x) for x in v])
-                for i, v in enumerate(vectors)
-            ],
-            "post_id long, sequence_no int, vector array<float>",
+        table = self.df()
+        first_id = self._next_id(
+            table.where(~F.col("post_id").eqNullSafe(F.lit(post_id)))
         )
-        merged = TO.insert_all(self.df(), post_id, new)
-        self._write(self._with_ids(merged))
+        new = self._new_rows(post_id, range(len(vectors)), vectors, first_id)
+        self._commit(TO.insert_all(table, post_id, new), first_id)
 
     def delete(self, id_: int) -> None:
         self._write(TO.delete(self.df(), id_))
 
+    def _new_rows(
+        self,
+        post_id: int,
+        sequence_nos: list[int] | range,
+        vectors: list[list[float]],
+        first_id: int | None,
+        vector_type: str | None = None,
+    ) -> DataFrame:
+        """Incoming chunks as a DataFrame built from a ``pyarrow.Table``,
+        which the JVM reads directly (a ``LocalTableScan``): a list of
+        tuples would become a pickled ``Scan ExistingRDD`` that starts a
+        Python worker on every action over the plan.  The ``float32``
+        conversion rounds to nearest, overflows to inf and keeps NaN,
+        like Java's ``Double.floatValue``.  ``first_id`` numbers the
+        rows in the given order; None leaves ``id`` NULL for
+        ``_with_ids``."""
+        cols = {
+            "post_id": pa.array([int(post_id)] * len(vectors), pa.int64()),
+            "sequence_no": pa.array([int(s) for s in sequence_nos], pa.int32()),
+            "vector": pa.array(
+                [[float(x) for x in v] for v in vectors], pa.list_(pa.float32())
+            ),
+            "vector_type": pa.array([vector_type] * len(vectors), pa.string()),
+        }
+        if first_id is not None:
+            cols["id"] = pa.array(range(first_id, first_id + len(vectors)), pa.int64())
+        return self.spark.createDataFrame(pa.table(cols))
+
+    def _next_id(self, kept: DataFrame) -> int | None:
+        """AUTO_INCREMENT on the driver: max(id) + 1 over the rows a
+        write keeps, from ONE scalar aggregate (a single-row collect).
+        None when any kept row is unnumbered — only a snapshot written
+        outside the facade has such rows, and numbering them needs
+        ``_with_ids``."""
+        max_id, unnumbered = kept.agg(
+            F.max("id"), F.count_if(F.col("id").isNull())
+        ).first()
+        return None if unnumbered else (max_id or 0) + 1
+
+    def _commit(self, merged: DataFrame, first_id: int | None) -> None:
+        self._write(merged if first_id is not None else self._with_ids(merged))
+
     def _with_ids(self, df: DataFrame) -> DataFrame:
         """Assign stable surrogate ids to rows missing one (AUTO_INCREMENT
-        analog): contiguous ids in (post_id, sequence_no) order starting at
-        max(id) + 1.
+        analog): contiguous ids in (post_id nulls first, sequence_no)
+        order starting at max(id) + 1.
 
-        Scale shape — NO global window and NO driver collect: row_number
-        runs per ``post_id`` partition; the per-post starting offsets come
+        The fallback of the facade writes: ``_next_id`` numbers a
+        facade write's new rows on the driver, so this runs only when
+        the stored snapshot already holds unnumbered rows (one written
+        outside the facade, e.g. raw ``table_ops.derive`` output), and
+        then numbers stored and new rows together.
+
+        Scale shape — no global window and no collect: row_number runs
+        per ``post_id`` partition; the per-post starting offsets come
         from a window over the tiny per-post count aggregate (rows =
         #posts, not #chunks) broadcast back; max(id) rides the same
         broadcast as a 1-row cross join."""
@@ -368,9 +423,12 @@ class VectorTableQueue:
     def add_posts(self, post_ids: list[int], now: _dt.datetime | None = None) -> None:
         now = now or _utcnow()
         base = self._next_job_id()
+        # Arrow-built, like VectorTable._new_rows: no pickled RDD scan
         jobs = self.spark.createDataFrame(
-            [(base + i, int(p)) for i, p in enumerate(post_ids)],
-            "job_id long, post_id long",
+            pa.table({
+                "job_id": pa.array(range(base, base + len(post_ids)), pa.int64()),
+                "post_id": pa.array([int(p) for p in post_ids], pa.int64()),
+            })
         )
         self._write(Q.add_posts(self.df(), jobs, now))
 
