@@ -1,6 +1,12 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") for the bench surface into
-plans/r12/<query>_<tag>.txt (tag = before/after, argv[1]).
+<out_dir>/<query>_<tag>.txt.
+
+Usage: python3 plans/capture_plans.py OUT_DIR [TAG] [QUERY,QUERY,...]
+(TAG defaults to "before"; the optional comma list limits the queries).
+The package is imported from the checkout the script lives in, so the
+same script captures "before" plans from a second checkout of an older
+commit while writing wherever OUT_DIR points.
 
 Query callables rebuild their lineage per call, so the captured plan is
 exactly what bench.py times.  The two curate_pipeline extras are
@@ -13,17 +19,14 @@ from __future__ import annotations
 import os
 import sys
 
-# repo root = two levels up from plans/r12 — relative so the same script
-# captures "before" plans from an A/B worktree of the pinned ref
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-)
+# repo root = the parent of this script's plans/ dir
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from bench import SF_DIR  # noqa: E402 — the data dir (and default) bench.py times
 
-TAG = sys.argv[1] if len(sys.argv) > 1 else "before"
-# plans always land in the MAIN repo's plans/r12 (committed evidence),
-# even when the script runs from a worktree
-OUT = "/root/repo/plans/r12"
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+if len(sys.argv) < 2:
+    sys.exit(__doc__)
+OUT = sys.argv[1]
+TAG = sys.argv[2] if len(sys.argv) > 2 else "before"
 
 
 def main() -> None:
@@ -104,8 +107,7 @@ def main() -> None:
             docs.select("doc_id", "text")
         ),
         "events_hll_rollup": lambda: EV.approx_distinct_rollup(events),
-        # round-12 targets: the batched PQ/IVFPQ serving plans (literal
-        # ADC tables vs broadcast table join) against throwaway indexes
+        # the batched PQ/IVFPQ serving plans against throwaway indexes
         "ann_pq_batch_50": lambda: _pq_batch(),
         "ann_ivfpq_batch_50": lambda: _ivfpq_batch(),
         "curate_weighted_sample": lambda: CU.weighted_budget_sample(
@@ -145,7 +147,8 @@ def main() -> None:
 
     # stream_tumbling: plan is the micro-batch engine's, not capturable
     # via explain on the returned static frame — timing evidence only.
-    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    os.makedirs(OUT, exist_ok=True)
     for name, fn in qmap.items():
         if only is not None and name not in only:
             continue

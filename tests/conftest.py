@@ -14,6 +14,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def path_forms(base, name: str) -> list[tuple[str, str]]:
+    """``(path handed to the code, same path on local disk)`` for a plain
+    local path and for its ``file:`` URI: the durable-state crash-window
+    tests run over both forms, each under its own subdirectory of
+    ``base``."""
+    out = []
+    for form in ("plain", "uri"):
+        local = str(base / form / name)
+        out.append((local if form == "plain" else f"file:{local}", local))
+    return out
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("wpvectordb-tests", shuffle_partitions=8)

@@ -8,6 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import path_forms
 from wpvectordb_spark.table import VectorTable, VectorTableQueue
 
 
@@ -88,38 +89,36 @@ def test_queue_lifecycle(spark, tmp_path):
     assert page.count() == 2
 
 
-def test_snapshot_swap_is_crash_safe(spark, tmp_path):
+def test_snapshot_swap_is_crash_safe(spark, tmp_path, monkeypatch):
     """At every instant of a snapshot rewrite, at least one full copy of
     the table exists on disk (old or new) — the delete-then-rename order
     lost the table if the process died in the gap, and init() would then
     recreate it EMPTY."""
     import os
 
-    from wpvectordb_spark import table as TBL
+    from wpvectordb_spark import fsutil
 
-    path = str(tmp_path / "t")
     df1 = spark.createDataFrame([(1,)], "x long")
     df2 = spark.createDataFrame([(2,)], "x long")
-    TBL._write_snapshot(path, df1)
-    real_rename = os.rename
-    seen = []
+    for path, local in path_forms(tmp_path, "t"):
+        fsutil.write_snapshot(spark, path, df1.write.parquet)
+        real_rename = fsutil.rename
+        seen = []
 
-    def spy(a, b):
-        # before each rename, SOME readable copy of the data must exist
-        seen.append(
-            os.path.exists(path) or os.path.exists(path + "__old")
-            or os.path.exists(path + "__staging")
-        )
-        real_rename(a, b)
+        def spy(spark_, a, b):
+            # before each rename, SOME readable copy of the data must exist
+            seen.append(
+                os.path.exists(local) or os.path.exists(local + "__old")
+                or os.path.exists(local + "__staging")
+            )
+            real_rename(spark_, a, b)
 
-    os.rename = spy
-    try:
-        TBL._write_snapshot(path, df2)
-    finally:
-        os.rename = real_rename
-    assert seen and all(seen)
-    assert [r["x"] for r in spark.read.parquet(path).collect()] == [2]
-    assert not os.path.exists(path + "__old")
+        monkeypatch.setattr(fsutil, "rename", spy)
+        fsutil.write_snapshot(spark, path, df2.write.parquet)
+        monkeypatch.undo()
+        assert seen and all(seen)
+        assert [r["x"] for r in spark.read.parquet(path).collect()] == [2]
+        assert not os.path.exists(local + "__old")
 
 
 def test_facade_guards(spark, tmp_path):
@@ -127,10 +126,6 @@ def test_facade_guards(spark, tmp_path):
 
     from wpvectordb_spark.table import VectorTable, VectorTableQueue
 
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTable(spark, "s3a://bucket/vectors")
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTableQueue(spark, "hdfs://nn/queue")
     vt = VectorTable(spark, str(tmp_path / "v"), vector_length=4)
     vt.init()
     with _pytest.raises(ValueError):
@@ -144,14 +139,15 @@ def test_facade_guards(spark, tmp_path):
 
 
 def test_file_uri_normalized_to_local_path(spark, tmp_path):
-    """file:// URIs are stripped to plain local paths: os.path-based
-    existence checks must see the same table Spark writes — the raw URI
-    made table_exists() False and init() overwrote the data."""
+    """A file:// URI and the plain local path name the same table: the
+    facades' existence checks go through the same filesystem Spark
+    writes with, so a second handle must see the table and init() must
+    not overwrite it.  Malformed URIs fail loudly instead of naming some
+    other location."""
     import pytest as _pytest
 
     plain = str(tmp_path / "vectors")
     vt_uri = VectorTable(spark, f"file://{plain}", vector_length=4)
-    assert vt_uri.path == plain
     vt_uri.init()
     vt_uri.insert_all(1, [[1.0, 0.0, 0.0, 0.0]])
     assert vt_uri.table_exists()
@@ -160,25 +156,15 @@ def test_file_uri_normalized_to_local_path(spark, tmp_path):
     assert vt2.table_exists()
     vt2.init()  # must be a no-op, not an overwrite
     assert vt2.get_vector_count() == 1
-    # non-local authority is remote storage in disguise
-    with _pytest.raises(ValueError, match="authority"):
-        VectorTable(spark, "file://other-host/data/v")
-    # Hadoop/Spark canonicalize local paths to the SINGLE-slash URI form
-    # (file:/x) — it must normalize like file:///x, and single-slash
-    # remote schemes must still be refused (not treated as relative paths)
-    assert VectorTable(spark, f"file:{plain}", vector_length=4).path == plain
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTable(spark, "hdfs:/data/v")
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTableQueue(spark, "s3a:/bucket/q")
-    # a Windows drive path is a LOCAL path, not a scheme-'C' URI (no
-    # registered URI scheme is one letter); slashless file: is neither a
-    # canonical URI nor a plain path — refused, not a literal filename
-    from wpvectordb_spark.table import _check_local_path
-
-    assert _check_local_path("C:/data/vectors") == "C:/data/vectors"
-    with _pytest.raises(ValueError, match="malformed"):
-        _check_local_path("file:relative/path")
+    # the single-slash form Hadoop/Spark print, and the plain path
+    for p in (f"file:{plain}", plain):
+        assert VectorTable(spark, p, vector_length=4).get_vector_count() == 1
+    # slashless file: is a relative path in an absolute URI, and a
+    # non-local authority is another filesystem: both raise
+    with _pytest.raises(Exception, match="Relative path in absolute URI"):
+        VectorTable(spark, "file:relative/path", vector_length=4).init()
+    with _pytest.raises(Exception, match="Wrong FS"):
+        VectorTableQueue(spark, "file://other-host/data/q").init()
 
 
 def test_snapshot_old_copy_recovered_after_crash(spark, tmp_path):
@@ -187,28 +173,29 @@ def test_snapshot_old_copy_recovered_after_crash(spark, tmp_path):
     of recreating the table empty (and then gc'ing the only copy)."""
     import os
 
-    path = str(tmp_path / "vectors")
-    vt = VectorTable(spark, path, vector_length=4)
-    vt.init()
-    vt.insert_all(7, [[1.0, 0.0, 0.0, 0.0]])
-    # simulate the crash window: snapshot renamed aside, new never landed
-    os.rename(path, path + "__old")
-    assert vt.table_exists()  # recovery happened
-    assert not os.path.exists(path + "__old")
-    assert vt.get_vector_count() == 1
-    vt.init()  # still a no-op after recovery
-    assert vt.get_vector_count() == 1
-    # same for the queue facade
-    qpath = str(tmp_path / "queue")
-    q = VectorTableQueue(spark, qpath)
-    q.init()
-    q.add_post(42)
-    os.rename(qpath, qpath + "__old")
-    assert q.get_total_records() == 1
-    # and a write-first sequence (no read between crash and write)
-    os.rename(qpath, qpath + "__old")
-    q.add_post(43)
-    assert q.get_total_records() == 2
+    for (path, local), (qpath, qlocal) in zip(
+        path_forms(tmp_path, "vectors"), path_forms(tmp_path, "queue")
+    ):
+        vt = VectorTable(spark, path, vector_length=4)
+        vt.init()
+        vt.insert_all(7, [[1.0, 0.0, 0.0, 0.0]])
+        # simulate the crash window: snapshot renamed aside, new never landed
+        os.rename(local, local + "__old")
+        assert vt.table_exists()  # recovery happened
+        assert not os.path.exists(local + "__old")
+        assert vt.get_vector_count() == 1
+        vt.init()  # still a no-op after recovery
+        assert vt.get_vector_count() == 1
+        # same for the queue facade
+        q = VectorTableQueue(spark, qpath)
+        q.init()
+        q.add_post(42)
+        os.rename(qlocal, qlocal + "__old")
+        assert q.get_total_records() == 1
+        # and a write-first sequence (no read between crash and write)
+        os.rename(qlocal, qlocal + "__old")
+        q.add_post(43)
+        assert q.get_total_records() == 2
 
 
 def _jobs_in(spark, group, fn):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from wpvectordb_spark.operators import search as S
 from wpvectordb_spark.operators import similarity as SIM
 from wpvectordb_spark.operators import table_ops as TO
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, path_forms
 
 
 @pytest.fixture(scope="module")
@@ -925,7 +925,7 @@ def test_retrain_ivf_index_closes_the_loop(spark, tmp_path_factory):
     assert out["mean_recall"] == 0.0  # probe 0 holds none of the drifts
     assert out["retrain"] is True and out["rebuilt"] is True
     assert out["recall_after"] == 1.0  # drift region owns a centroid now
-    assert not os.path.isdir(path + "__retrain")
+    assert not os.path.isdir(path + "__staging")
     assert not os.path.isdir(path + "__old")
     # the rebuilt index serves the drift region through its own cluster
     got = SIM.ivf_topk_from_index(spark, path, vec(0.05, 0, 1, 0), k=5, n_probe=1)
@@ -1042,10 +1042,37 @@ def test_retrain_heals_swap_debris(spark, tmp_path_factory):
     entry must drop it (it previously persisted until the next flagged
     rebuild).  The between-renames window (path absent, data in
     path__old) must still recover by renaming back."""
-    import shutil
+    base = [(i, [1.0, 0.0]) for i in range(10)] + [
+        (100 + i, [0.0, 1.0]) for i in range(10)
+    ]
+    schema = "vec_id long, embedding array<double>"
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "query_id long, query_vector array<double>"
+    )
+    for path, local in path_forms(tmp_path_factory.mktemp("heal"), "ivf"):
+        SIM.build_ivf_index(spark.createDataFrame(base, schema), path, n_clusters=2)
+        # stale __old beside a live index (kill-after-promote debris)
+        shutil.copytree(local, local + "__old")
+        out = SIM.retrain_ivf_index(spark, path, q, threshold=0.5, k=5, n_probe=1)
+        assert out["mean_recall"] == 1.0
+        assert not os.path.exists(local + "__old")
+        # between-the-renames window: path absent, only copy at __old
+        os.rename(local, local + "__old")
+        out = SIM.retrain_ivf_index(spark, path, q, threshold=0.5, k=5, n_probe=1)
+        assert out["mean_recall"] == 1.0
+        assert os.path.isdir(local) and not os.path.exists(local + "__old")
 
-    td = str(tmp_path_factory.mktemp("heal"))
-    path = f"{td}/ivf"
+
+def test_retrain_killed_mid_build_leaves_staging_for_vacuum(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A retrain killed after its rebuild wrote the staging dir (before
+    any rename) leaves the live index untouched and the partial build at
+    path__staging — the same debris name as every other snapshot write,
+    so maintenance.vacuum removes it; the next retrain runs cleanly."""
+    from wpvectordb_spark.operators import maintenance as MA
+
+    path = str(tmp_path_factory.mktemp("killed") / "ivf")
     base = [(i, [1.0, 0.0]) for i in range(10)] + [
         (100 + i, [0.0, 1.0]) for i in range(10)
     ]
@@ -1054,23 +1081,28 @@ def test_retrain_heals_swap_debris(spark, tmp_path_factory):
     q = spark.createDataFrame(
         [(0, [1.0, 0.0])], "query_id long, query_vector array<double>"
     )
-    # stale __old beside a live index (kill-after-promote debris)
-    shutil.copytree(path, path + "__old")
-    out = SIM.retrain_ivf_index(spark, path, q, threshold=0.5, k=5, n_probe=1)
-    assert out["mean_recall"] == 1.0
-    assert not os.path.exists(path + "__old")
-    # between-the-renames window: path absent, only copy at __old
-    os.rename(path, path + "__old")
-    out = SIM.retrain_ivf_index(spark, path, q, threshold=0.5, k=5, n_probe=1)
-    assert out["mean_recall"] == 1.0
-    assert os.path.isdir(path) and not os.path.exists(path + "__old")
+    real_build = SIM.build_ivf_index
+
+    def dying_build(df, out, **kw):
+        real_build(df, out, **kw)
+        raise RuntimeError("killed mid-build")
+
+    monkeypatch.setattr(SIM, "build_ivf_index", dying_build)
+    with pytest.raises(RuntimeError, match="killed mid-build"):
+        # threshold above any recall: always flags, always rebuilds
+        SIM.retrain_ivf_index(spark, path, q, threshold=1.1, k=5, n_probe=1)
+    monkeypatch.undo()
+    assert os.path.isdir(path + "__staging")
+    assert MA.vacuum(path) == [path + "__staging"]
+    out = SIM.retrain_ivf_index(spark, path, q, threshold=1.1, k=5, n_probe=1)
+    assert out["rebuilt"] is True and out["recall_after"] == 1.0
 
 
 def test_retrain_over_file_uri(spark, tmp_path_factory):
     """The closed loop end-to-end with the index addressed as a file:/
-    URI — the path shape a Hadoop-backed deployment hands around.  The
-    POSIX os.rename swap could never see such a path; the fsutil swap
-    must flag, rebuild, promote, and restore recall identically."""
+    URI — the path shape a Hadoop-backed deployment hands around: the
+    fsutil swap must flag, rebuild, promote, and restore recall
+    identically."""
     td = str(tmp_path_factory.mktemp("uri_retrain"))
     local = f"{td}/ivf"
     path = "file:" + local
@@ -1101,4 +1133,4 @@ def test_retrain_over_file_uri(spark, tmp_path_factory):
     assert out["recall_after"] == 1.0
     assert os.path.isdir(local)
     assert not os.path.exists(local + "__old")
-    assert not os.path.exists(local + "__retrain")
+    assert not os.path.exists(local + "__staging")

@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, path_forms
 from wpvectordb_spark.operators import maintenance as M
 
 
@@ -204,6 +204,9 @@ def test_zorder_key_refuses_string_and_accepts_temporal(spark):
 def test_compact_refuses_missing_table(spark, tmp_path):
     with pytest.raises(ValueError, match="no parquet files"):
         M.compact_table(spark, str(tmp_path / "nope"))
+    # the footer report raises too: an empty list would read as "no files"
+    with pytest.raises(FileNotFoundError, match="no table"):
+        M.data_skipping_stats(str(tmp_path / "nope"), "user_id")
 
 
 def _emb(spark):
@@ -322,31 +325,31 @@ def test_optimize_index_on_ivfpq_keeps_serving_identical(spark, tmp_path):
 
 
 def test_compaction_crash_window_recovers(spark, tmp_path):
-    """Simulate the kill between _write_snapshot's renames (table present
+    """Simulate the kill between write_snapshot's renames (table present
     only as __old): recover_table renames it back, a re-run compaction
     over the recovered table succeeds, rows intact.  vacuum refuses to
     delete ANYTHING while the live dir is missing — __old is the only
     copy, and __staging may hold a completed rewrite from a crash
     between the swap's renames (it only becomes debris once the live
     copy exists again)."""
-    path = str(tmp_path / "t")
-    _write_fragmented(spark, path, 8)
-    n = spark.read.parquet(path).count()
-    os.rename(path, path + "__old")
-    os.makedirs(path + "__staging")  # staging left by the dying swap
+    for path, local in path_forms(tmp_path, "t"):
+        _write_fragmented(spark, path, 8)
+        n = spark.read.parquet(path).count()
+        os.rename(local, local + "__old")
+        os.makedirs(local + "__staging")  # staging left by the dying swap
 
-    assert M.vacuum(path) == []  # both survive: live dir missing
-    assert os.path.isdir(path + "__old")
-    assert os.path.isdir(path + "__staging")
+        assert M.vacuum(path) == []  # both survive: live dir missing
+        assert os.path.isdir(local + "__old")
+        assert os.path.isdir(local + "__staging")
 
-    assert M.recover_table(path) is True
-    assert M.recover_table(path) is False  # idempotent
-    # live copy restored -> the stale staging is now removable debris
-    assert M.vacuum(path) == [path + "__staging"]
-    report = M.compact_table(spark, path, target_file_bytes=1 << 40)
-    assert report["after"]["n_files"] == 1
-    assert spark.read.parquet(path).count() == n
-    assert M.vacuum(path) == []  # nothing left to clean
+        assert M.recover_table(path) is True
+        assert M.recover_table(path) is False  # idempotent
+        # live copy restored -> the stale staging is now removable debris
+        assert M.vacuum(path) == [path + "__staging"]
+        report = M.compact_table(spark, path, target_file_bytes=1 << 40)
+        assert report["after"]["n_files"] == 1
+        assert spark.read.parquet(path).count() == n
+        assert M.vacuum(path) == []  # nothing left to clean
 
 
 def test_queue_facade_compact(spark, tmp_path):

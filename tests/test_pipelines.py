@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wpvectordb_spark.pipelines import curate_training_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, path_forms
 
 
 def test_curate_training_corpus_end_to_end(spark):
@@ -229,26 +229,26 @@ def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
         holdout=holdout, quality_quantile=0.25, near_dup_threshold=0.85,
         num_shards=4, seq_len=256,
     )
-    mdir = str(tmp_path / "manifests")
-    out1 = {
-        tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
-    }
-    # simulate the crash: stage 4 never committed (partial, no _SUCCESS)
-    shutil.rmtree(os.path.join(mdir, "stage04_decontaminate"))
-    mtime_before = os.path.getmtime(
-        os.path.join(mdir, "stage02_near_dedup", "_SUCCESS")
-    )
-    out2 = {
-        tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
-    }
-    assert out2 == out1
-    assert os.path.exists(os.path.join(mdir, "stage04_decontaminate", "_SUCCESS"))
-    # the surviving prefix was adopted, not rewritten
-    assert os.path.getmtime(
-        os.path.join(mdir, "stage02_near_dedup", "_SUCCESS")
-    ) == mtime_before
+    for mdir, local in path_forms(tmp_path, "manifests"):
+        out1 = {
+            tuple(r)
+            for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        }
+        # simulate the crash: stage 4 never committed (partial, no _SUCCESS)
+        shutil.rmtree(os.path.join(local, "stage04_decontaminate"))
+        mtime_before = os.path.getmtime(
+            os.path.join(local, "stage02_near_dedup", "_SUCCESS")
+        )
+        out2 = {
+            tuple(r)
+            for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        }
+        assert out2 == out1
+        assert os.path.exists(os.path.join(local, "stage04_decontaminate", "_SUCCESS"))
+        # the surviving prefix was adopted, not rewritten
+        assert os.path.getmtime(
+            os.path.join(local, "stage02_near_dedup", "_SUCCESS")
+        ) == mtime_before
 
 
 def test_curate_training_corpus_soft_dedup(spark):
@@ -398,12 +398,15 @@ def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
         tuple(r)
         for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
     }
-    # simulate the pre-upgrade sidecar: drop the soft_dedup key
+    # simulate the pre-upgrade sidecar: drop the soft_dedup key.  A real
+    # legacy file was written without a checksum sidecar, so drop the one
+    # the current writer left (it would no longer match the contents)
     pfile = os.path.join(mdir, "_params.json")
     params = json.loads(open(pfile).read())
     assert params.pop("soft_dedup") is False
     with open(pfile, "w") as fh:
         fh.write(json.dumps(params, sort_keys=True))
+    os.remove(os.path.join(mdir, "._params.json.crc"))
     out2 = {
         tuple(r)
         for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
@@ -418,7 +421,7 @@ def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
         )
 
 
-def test_manifest_params_corrupted_file_refuses_loudly(tmp_path):
+def test_manifest_params_corrupted_file_refuses_loudly(spark, tmp_path):
     """A truncated/corrupted _params.json must raise the explanatory
     ValueError (with the raw contents in the message), not a bare
     JSONDecodeError (ADVICE round 10)."""
@@ -433,4 +436,4 @@ def test_manifest_params_corrupted_file_refuses_loudly(tmp_path):
     with open(os.path.join(mdir, "_params.json"), "w") as fh:
         fh.write('{"quality_quantile": 0.2')  # truncated write
     with _pytest.raises(ValueError, match="unreadable"):
-        _guard_manifest_params(mdir, {"quality_quantile": 0.25})
+        _guard_manifest_params(spark, mdir, {"quality_quantile": 0.25})

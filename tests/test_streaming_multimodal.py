@@ -14,7 +14,7 @@ from wpvectordb_spark.operators import queue_ops as Q
 from wpvectordb_spark.schemas import QUEUE_SCHEMA
 from wpvectordb_spark.sources.loaders import load_events
 from wpvectordb_spark.streaming import streams as ST
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, path_forms
 
 
 def test_stream_tumbling_equals_batch(spark):
@@ -33,6 +33,57 @@ def test_stream_tumbling_equals_batch(spark):
     g = {tuple(r) for r in got.collect()}
     b = {tuple(r) for r in batch.collect()}
     assert g == b and len(g) > 0
+
+
+def test_run_stream_to_completion_conf_is_race_free(spark, tmp_path, monkeypatch):
+    """Two concurrent callers with different ``state_partitions``: each
+    query starts under its own partition count, both results are right,
+    and the session conf ends at its original value.  A slowed
+    ``start()`` widens the set -> start -> restore window, in which an
+    unlocked caller would start under the other's count and restore the
+    other's value over the original."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    src = str(tmp_path / "src")
+    spark.range(0, 40).select((F.col("id") % 4).alias("k")).write.parquet(src)
+    real_start = DataStreamWriter.start
+    started_with = {}
+
+    def slow_start(self, *args, **kwargs):
+        time.sleep(0.2)
+        started_with[threading.current_thread().name] = spark.conf.get(
+            "spark.sql.shuffle.partitions"
+        )
+        return real_start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    original = spark.conf.get("spark.sql.shuffle.partitions")
+    results, errors = {}, []
+
+    def run(parts: int) -> None:
+        try:
+            counts = spark.readStream.schema("k long").parquet(src).groupBy("k").count()
+            got = ST.run_stream_to_completion(
+                spark, counts, output_mode="complete", state_partitions=parts
+            )
+            results[parts] = sorted(map(tuple, got.collect()))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(p,), name=f"p{p}") for p in (3, 5)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    expected = [(k, 10) for k in range(4)]
+    assert results == {3: expected, 5: expected}
+    assert started_with == {"p3": "3", "p5": "5"}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == original
 
 
 def test_stream_queue_ingest(spark):
@@ -586,43 +637,42 @@ def test_state_listing_ignores_uncommitted_dirs(spark, tmp_path):
     the _SUCCESS marker: state listings must skip it (the in-flight
     batch overwrites it on replay; an accessor reading it meanwhile
     would surface partial rows as committed state)."""
-    import os
-
-    root = str(tmp_path / "pairs")
-    os.makedirs(root)
-    spark.createDataFrame([(1, 2, 0.9)], ST._DEDUP_PAIRS_SCHEMA).write.parquet(
-        os.path.join(root, "b0")
-    )
-    # simulate the crashed write: data file present, no _SUCCESS
-    partial = os.path.join(root, "b1")
-    spark.createDataFrame([(3, 4, 0.8)], ST._DEDUP_PAIRS_SCHEMA).write.parquet(partial)
-    os.remove(os.path.join(partial, "_SUCCESS"))
-    got = sorted(
-        map(tuple, ST._read_state(spark, root, ST._DEDUP_PAIRS_SCHEMA).collect())
-    )
-    assert got == [(1, 2, 0.9)]
-    # same rule for queue version adoption: a partial newest version is
-    # skipped in favor of the last committed one
-    qroot = str(tmp_path / "queue")
-    os.makedirs(qroot)
-    empty = spark.createDataFrame([], QUEUE_SCHEMA)
-    empty.write.parquet(os.path.join(qroot, "v0"))
-    spark.createDataFrame([], QUEUE_SCHEMA).write.parquet(os.path.join(qroot, "v1"))
-    os.remove(os.path.join(qroot, "v1", "_SUCCESS"))
     now = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    src = str(tmp_path / "src")
-    spark.range(0, 3).select(
-        F.col("id").alias("job_id"), F.col("id").alias("post_id")
-    ).write.parquet(src)
-    stream = spark.readStream.schema("job_id long, post_id long").parquet(src)
-    get_state, q = ST.stream_queue_ingest(
-        spark, stream, empty, now, state_path=qroot
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert get_state().count() == 3  # resumed from committed v0, not partial v1
+    empty = spark.createDataFrame([], QUEUE_SCHEMA)
+    for base, local_base in path_forms(tmp_path, "s"):
+        root = f"{base}/pairs"
+        spark.createDataFrame([(1, 2, 0.9)], ST._DEDUP_PAIRS_SCHEMA).write.parquet(
+            f"{root}/b0"
+        )
+        # simulate the crashed write: data file present, no _SUCCESS
+        spark.createDataFrame([(3, 4, 0.8)], ST._DEDUP_PAIRS_SCHEMA).write.parquet(
+            f"{root}/b1"
+        )
+        os.remove(f"{local_base}/pairs/b1/_SUCCESS")
+        got = sorted(
+            map(tuple, ST._read_state(spark, root, ST._DEDUP_PAIRS_SCHEMA).collect())
+        )
+        assert got == [(1, 2, 0.9)], base
+        # same rule for queue version adoption: a partial newest version
+        # is skipped in favor of the last committed one
+        qroot = f"{base}/queue"
+        empty.write.parquet(f"{qroot}/v0")
+        empty.write.parquet(f"{qroot}/v1")
+        os.remove(f"{local_base}/queue/v1/_SUCCESS")
+        src = f"{local_base}/src"
+        spark.range(0, 3).select(
+            F.col("id").alias("job_id"), F.col("id").alias("post_id")
+        ).write.parquet(src)
+        stream = spark.readStream.schema("job_id long, post_id long").parquet(src)
+        get_state, q = ST.stream_queue_ingest(
+            spark, stream, empty, now, state_path=qroot
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        # resumed from committed v0, not partial v1
+        assert get_state().count() == 3, base
 
 
 def test_dedup_state_restart_without_checkpoint_is_refused(spark, tmp_path):
@@ -630,25 +680,22 @@ def test_dedup_state_restart_without_checkpoint_is_refused(spark, tmp_path):
     0 over existing later-batch deltas: the batch must refuse loudly
     (silently proceeding would skip the old corpus for cross-batch dedup
     and serve accessors a blend of two streams)."""
-    import os
-
     import pytest as _pytest
 
-    dirs = [str(tmp_path / d) for d in ("sh", "bands", "pairs")]
-    for d in dirs:
-        os.makedirs(d)
     docs = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .where(F.col("doc_id") < 20)
         .select("doc_id", "text")
     )
-    ST._dedup_ingest_apply(spark, *dirs, 0.5, docs, 0)
-    ST._dedup_ingest_apply(spark, *dirs, 0.5, docs.limit(5), 1)
-    # batch id 0 again over state holding batch 1 = restarted checkpoint
-    with _pytest.raises(Exception, match="ORIGINAL checkpoint_path"):
+    for base, _ in path_forms(tmp_path, "state"):
+        dirs = [f"{base}/{d}" for d in ("sh", "bands", "pairs")]
         ST._dedup_ingest_apply(spark, *dirs, 0.5, docs, 0)
-    # replaying the LATEST batch id stays legal (its own earlier attempt)
-    ST._dedup_ingest_apply(spark, *dirs, 0.5, docs.limit(5), 1)
+        ST._dedup_ingest_apply(spark, *dirs, 0.5, docs.limit(5), 1)
+        # batch id 0 again over state holding batch 1 = restarted checkpoint
+        with _pytest.raises(Exception, match="ORIGINAL checkpoint_path"):
+            ST._dedup_ingest_apply(spark, *dirs, 0.5, docs, 0)
+        # replaying the LATEST batch id stays legal (its own earlier attempt)
+        ST._dedup_ingest_apply(spark, *dirs, 0.5, docs.limit(5), 1)
 
 
 def test_queue_state_restart_without_checkpoint_is_refused(spark, tmp_path):
@@ -659,39 +706,43 @@ def test_queue_state_restart_without_checkpoint_is_refused(spark, tmp_path):
     only because add_posts happens to be anti-join idempotent)."""
     now = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     empty = spark.createDataFrame([], QUEUE_SCHEMA)
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
+    for base, local_base in path_forms(tmp_path, "q"):
+        src = f"{local_base}/src"
+        state = f"{base}/state"
+        ckpt = f"{local_base}/ckpt"
 
-    def run_once(lo, hi, checkpoint):
-        spark.range(lo, hi).select(
-            F.col("id").alias("job_id"), F.col("id").alias("post_id")
-        ).repartition(1).write.mode("append").parquet(src)
+        def run_once(lo, hi, checkpoint):
+            spark.range(lo, hi).select(
+                F.col("id").alias("job_id"), F.col("id").alias("post_id")
+            ).repartition(1).write.mode("append").parquet(src)
+            stream = spark.readStream.schema("job_id long, post_id long").parquet(src)
+            get_state, q = ST.stream_queue_ingest(
+                spark, stream, empty, now, state_path=state, checkpoint_path=checkpoint
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            return get_state
+
+        run_once(0, 10, ckpt)
+        run_once(10, 20, ckpt)  # marker now records batch id 1
+        # only the newest batch marker survives
+        markers = [n for n in os.listdir(f"{local_base}/state") if n.startswith("_batch_")]
+        assert markers == ["_batch_1"]
+        # same state, FRESH checkpoint -> batch ids restart at 0 < marker
         stream = spark.readStream.schema("job_id long, post_id long").parquet(src)
         get_state, q = ST.stream_queue_ingest(
-            spark, stream, empty, now, state_path=state, checkpoint_path=checkpoint
+            spark, stream, empty, now,
+            state_path=state, checkpoint_path=f"{local_base}/ckpt2",
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return get_state
-
-    run_once(0, 10, ckpt)
-    run_once(10, 20, ckpt)  # marker now records batch id 1
-    # same state, FRESH checkpoint -> batch ids restart at 0 < marker
-    stream = spark.readStream.schema("job_id long, post_id long").parquet(src)
-    get_state, q = ST.stream_queue_ingest(
-        spark, stream, empty, now,
-        state_path=state, checkpoint_path=str(tmp_path / "ckpt2"),
-    )
-    with pytest.raises(Exception, match="ORIGINAL checkpoint_path"):
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    # the adopted state survives untouched and readable
-    assert get_state().count() == 20
+        with pytest.raises(Exception, match="ORIGINAL checkpoint_path"):
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        # the adopted state survives untouched and readable
+        assert get_state().count() == 20
 
 
 def test_queue_ingest_apply_crash_replay_is_idempotent(spark, tmp_path):
@@ -710,19 +761,19 @@ def test_queue_ingest_apply_crash_replay_is_idempotent(spark, tmp_path):
     )
     ST._queue_ingest_apply(spark, root, jobs(0, 10), 0, now)
     before = sorted(map(tuple, spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").collect()))
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").collect()))
     assert len(before) == 10
     # crash-recovery replay of batch 0 (marker == bid): allowed, no-op
     ST._queue_ingest_apply(spark, root, jobs(0, 10), 0, now)
     after = sorted(map(tuple, spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").collect()))
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").collect()))
     assert after == before
     # the stream continues
     ST._queue_ingest_apply(spark, root, jobs(10, 15), 1, now)
     assert spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").count() == 15
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").count() == 15
     # retention: at most the current + one superseded version on disk
-    assert len(ST._queue_state_versions(root)) <= 2
+    assert len(ST._queue_state_versions(spark, root)) <= 2
 
 
 def test_stream_ann_serve_matches_batch_serve(spark, tmp_path):
@@ -819,7 +870,7 @@ def test_stream_ann_serve_replay_compaction_and_refusals(spark, tmp_path):
     assert len(once) == 12 * 5
     # compaction folded old deltas: listing stays bounded (snapshot + the
     # batches newer than its coverage), never 4 loose delta dirs
-    upto, spath, deltas = ST._list_state(res_dir)
+    upto, spath, deltas = ST._list_state(spark, res_dir)
     assert spath is not None and len(deltas) < 4
     # replay the LATEST batch (the only legitimate replay) -> identical
     ST._ann_serve_apply(

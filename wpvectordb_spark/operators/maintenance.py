@@ -47,26 +47,29 @@ honest check that clustering bought pruning, not just an ordered write.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wpvectordb_spark import fsutil
+
 DEFAULT_TARGET_FILE_BYTES = 128 << 20  # the HDFS-block-sized lakehouse default
 
 
-def _parquet_files(path: str, suffix: str = ".parquet") -> list[str]:
-    """All data files under ``path`` (recursive: partitioned tables nest
-    ``key=value`` dirs), excluding markers and hidden/staging debris.
+def _parquet_files(
+    spark: SparkSession, path: str, suffix: str = ".parquet"
+) -> list[tuple[str, int]]:
+    """(qualified path, bytes) of every data file under ``path``
+    (recursive: partitioned tables nest ``key=value`` dirs), excluding
+    markers and hidden/staging debris; a missing path lists empty.
     ``suffix`` generalizes the listing to other Spark output formats
     (the training-shard sink's .orc/.json/.csv reports share this one
     debris rule instead of growing a second walk)."""
-    out: list[str] = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(suffix) and not f.startswith(("_", ".")):
-                out.append(os.path.join(root, f))
-    return sorted(out)
+    return sorted(
+        (f, n)
+        for f, n in fsutil.list_files(spark, path)
+        if f.endswith(suffix) and not f.rsplit("/", 1)[-1].startswith(("_", "."))
+    )
 
 
 def partition_columns(path: str) -> list[str]:
@@ -74,15 +77,14 @@ def partition_columns(path: str) -> list[str]:
     (``key=value`` subdirs, outermost first).  Empty list for a flat
     table.  Mixed layouts (two different keys at one level) refuse —
     that is not a layout Spark wrote."""
+    spark = SparkSession.active()
     cols: list[str] = []
     cur = path
-    while os.path.isdir(cur):
+    while True:
         subs = [
             d
-            for d in os.listdir(cur)
-            if "=" in d
-            and not d.startswith(("_", "."))
-            and os.path.isdir(os.path.join(cur, d))
+            for d in fsutil.glob_names(spark, cur, "*=*", dirs_only=True)
+            if not d.startswith(("_", "."))
         ]
         if not subs:
             return cols
@@ -93,16 +95,15 @@ def partition_columns(path: str) -> list[str]:
                 f"under {cur!r}"
             )
         cols.append(names.pop())
-        cur = os.path.join(cur, sorted(subs)[0])
-    return cols
+        cur = f"{cur.rstrip('/')}/{subs[0]}"
 
 
 def table_file_stats(path: str, suffix: str = ".parquet") -> dict:
     """File-level shape of a parquet table: the numbers OPTIMIZE decisions
-    are made from.  Driver-side listing — at production scale the same
-    figures come from the table format's manifest (Delta/Iceberg) or a
-    parallel FileSystem listing; a maintenance job reads them once."""
-    sizes = [os.path.getsize(f) for f in _parquet_files(path, suffix)]
+    are made from.  One recursive FileSystem listing — at production
+    scale the same figures come from the table format's manifest
+    (Delta/Iceberg); a maintenance job reads them once."""
+    sizes = [n for _, n in _parquet_files(SparkSession.active(), path, suffix)]
     return {
         "n_files": len(sizes),
         "total_bytes": sum(sizes),
@@ -249,7 +250,7 @@ def compact_table(
     Crash-safe: the rewrite lands in a staging dir and swaps in with the
     facades' rename protocol (old aside -> staging in -> old dropped), so
     a kill at any point leaves the old or the new snapshot, never zero
-    copies (``table._write_snapshot``).  Reads against the old listing
+    copies (``fsutil.write_snapshot``).  Reads against the old listing
     race exactly as they do with any snapshot write — same single-writer
     contract as the facades; Delta/Iceberg replace this with a commit.
 
@@ -259,12 +260,6 @@ def compact_table(
     ``sort_by``/``zorder_by`` always rewrites (the point is the order,
     not the count).
     """
-    # import here: table.py is facade-layer (imports operators); the
-    # one-way dep operators -> table stays acyclic but keep it local so
-    # module import order never matters
-    from wpvectordb_spark.table import _check_local_path, _write_snapshot
-
-    path = _check_local_path(path)
     pcols = partition_columns(path)
     if pcols:
         # reading a partitioned table and rewriting it flat would
@@ -284,10 +279,10 @@ def compact_table(
     plan = compact_plan(
         df, n_out, sort_by=sort_by, zorder_by=zorder_by, zorder_bits=zorder_bits
     )
-    # the plan reads `path` while the swap rewrites it — _write_snapshot
+    # the plan reads `path` while the swap rewrites it — write_snapshot
     # stages first, so the read finishes against the old files before any
     # rename touches them
-    _write_snapshot(path, plan)
+    fsutil.write_snapshot(spark, path, plan.write.mode("overwrite").parquet)
     return {
         "before": before,
         "after": table_file_stats(path),
@@ -324,9 +319,6 @@ def compact_partitioned_table(
     replaces the WHOLE table dir atomically, so readers never see a
     half-rewritten partition set.
     """
-    from wpvectordb_spark.table import _check_local_path, _write_snapshot
-
-    path = _check_local_path(path)
     pcols = partition_columns(path)
     if not pcols:
         raise ValueError(
@@ -345,7 +337,9 @@ def compact_partitioned_table(
         plan = df.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
     else:
         plan = df.repartition(n_out, *[F.col(c) for c in pcols])
-    _write_snapshot(path, plan, partition_by=pcols)
+    fsutil.write_snapshot(
+        spark, path, plan.write.mode("overwrite").partitionBy(*pcols).parquet
+    )
     return {
         "before": before,
         "after": table_file_stats(path),
@@ -357,18 +351,16 @@ def compact_partitioned_table(
 
 def recover_table(path: str) -> bool:
     """Close the compaction crash window for STANDALONE tables: a kill
-    between _write_snapshot's two renames leaves ``path`` absent with the
+    between write_snapshot's two renames leaves ``path`` absent with the
     data intact in ``path__old``.  The facades recover on every read
-    (``table._recover_snapshot``); a standalone compacted table (an ANN
+    (``fsutil.recover_snapshot``); a standalone compacted table (an ANN
     index's vectors dir, a manifest) recovers on its next maintenance
     call — or explicitly here.  Returns True if an orphan was renamed
     back."""
-    from wpvectordb_spark.table import _check_local_path, _recover_snapshot
-
-    path = _check_local_path(path)
-    existed = os.path.exists(path)
-    _recover_snapshot(path)
-    return not existed and os.path.exists(path)
+    spark = SparkSession.active()
+    existed = fsutil.exists(spark, path)
+    fsutil.recover_snapshot(spark, path)
+    return not existed and fsutil.exists(spark, path)
 
 
 def vacuum(path: str) -> list[str]:
@@ -383,20 +375,14 @@ def vacuum(path: str) -> list[str]:
     simply re-run after recovery), and a cleanup that mutates a crashed
     table's directory set before recovery has adjudicated it invites
     operator error.  Returns the paths removed."""
-    import shutil
-
-    from wpvectordb_spark.table import _check_local_path
-
-    path = _check_local_path(path)
-    removed = []
-    staging = path + "__staging"
-    if os.path.isdir(staging) and os.path.isdir(path):
-        shutil.rmtree(staging)
-        removed.append(staging)
-    old = path + "__old"
-    if os.path.isdir(old) and os.path.isdir(path):
-        shutil.rmtree(old)
-        removed.append(old)
+    spark = SparkSession.active()
+    if not fsutil.exists(spark, path):
+        return []
+    removed = [
+        p for p in (path + "__staging", path + "__old") if fsutil.exists(spark, p)
+    ]
+    for p in removed:
+        fsutil.delete(spark, p)
     return removed
 
 
@@ -405,12 +391,19 @@ def data_skipping_stats(path: str, column: str) -> list[dict]:
     parquet reader prunes with.  pyarrow, driver-side, METADATA-ONLY (no
     data pages read); production equivalents read the same numbers from
     the table-format manifest.  Returns one dict per file with row-group
-    aggregated min/max; files without stats report None."""
+    aggregated min/max; files without stats report None.  Raises on a
+    missing path or a file pyarrow cannot open (never a silent ``[]``)."""
     import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
 
+    spark = SparkSession.active()
+    if not fsutil.exists(spark, path):
+        raise FileNotFoundError(f"data_skipping_stats: no table at {path!r}")
     out = []
-    for f in _parquet_files(path):
-        md = pq.ParquetFile(f).metadata
+    for f, _ in _parquet_files(spark, path):
+        fs, local = pafs.FileSystem.from_uri(f)
+        with fs.open_input_file(local) as fh:
+            md = pq.ParquetFile(fh).metadata
         names = {md.schema.column(i).name: i for i in range(md.num_columns)}
         if column not in names:
             raise KeyError(f"{column!r} not in {f}: {sorted(names)}")

@@ -23,11 +23,15 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from wpvectordb_spark import fsutil
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file = one
@@ -96,6 +100,10 @@ BOUNDED_STATE_PARTITIONS = int(
 )
 
 
+#: serializes the session-conf window of ``run_stream_to_completion``
+_START_LOCK = threading.Lock()
+
+
 def run_stream_to_completion(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -114,26 +122,32 @@ def run_stream_to_completion(
     stores the query maintains forever.  Pass
     ``BOUNDED_STATE_PARTITIONS`` for aggregations whose state
     cardinality is bounded (see its docstring); leave ``None`` (the
-    session default) for key-cardinality state."""
+    session default) for key-cardinality state.
+
+    The conf is session-wide and the query clones the session at
+    ``start()``, so set -> start -> restore runs under one module lock:
+    concurrent callers would otherwise start with each other's count
+    and restore each other's value over the original."""
     import shutil
 
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    old_parts = None
-    if state_partitions is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    with _START_LOCK:
+        old_parts = None
+        if state_partitions is not None:
+            old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
+        try:
+            q = (
+                streaming_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+        finally:
+            if old_parts is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     try:
         q.processAllAvailable()
     finally:
@@ -245,16 +259,16 @@ def stream_queue_ingest(
     of obtaining it.
 
     ``state_path`` / ``checkpoint_path`` pin the versioned state table
-    and the streaming checkpoint to caller-supplied LOCAL directories so
+    and the streaming checkpoint to caller-supplied directories so
     a later ``start()`` over the same source resumes where this one
     stopped: existing ``v<N>`` dirs are adopted (``initial_queue`` is
     only written on a fresh state dir) and the checkpoint carries the
-    batch-id sequence forward.  Defaults stay throwaway temp dirs.  The
-    version repointing uses driver-local ``os`` calls, so remote URIs
-    are refused (same rule as the table facades — production state is
+    batch-id sequence forward.  Defaults stay throwaway temp dirs.
+    ``state_path`` may be any path Spark can write: listing, gc and the
+    batch marker go through ``fsutil`` (production state is still
     Delta/Iceberg).
 
-    Mirroring the dedup stream's restart refusal: a ``_last_batch``
+    Mirroring the dedup stream's restart refusal: a ``_batch_<id>``
     marker records the newest applied batch id, and a micro-batch whose
     id is LOWER than the marker (a ``start()`` reusing ``state_path``
     with a fresh/missing ``checkpoint_path``, so the batch-id sequence
@@ -266,8 +280,8 @@ def stream_queue_ingest(
     allowed.
     """
     root = _state_root(state_path, "stream_queue_state_")
-    if not _queue_state_versions(root):
-        initial_queue.write.mode("overwrite").parquet(os.path.join(root, "v0"))
+    if not _queue_state_versions(spark, root):
+        initial_queue.write.mode("overwrite").parquet(f"{root}/v0")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _queue_ingest_apply(spark, root, batch_df, batch_id, now)
@@ -282,14 +296,12 @@ def stream_queue_ingest(
     )
 
     def get_state() -> DataFrame:
-        return spark.read.parquet(
-            os.path.join(root, f"v{_queue_state_versions(root)[-1]}")
-        )
+        return spark.read.parquet(f"{root}/v{_queue_state_versions(spark, root)[-1]}")
 
     return get_state, query
 
 
-def _queue_state_versions(root: str) -> list[int]:
+def _queue_state_versions(spark: SparkSession, root: str) -> list[int]:
     """COMMITTED (_SUCCESS-marked) version numbers of a queue state dir,
     ascending.  A crashed mid-write leaves a partial v<N> dir, and
     resuming from partial state would silently drop the missing rows
@@ -297,10 +309,8 @@ def _queue_state_versions(root: str) -> list[int]:
     the next write."""
     return sorted(
         int(d[1:])
-        for d in os.listdir(root)
-        if d.startswith("v")
-        and d[1:].isdigit()
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
+        for d in fsutil.glob_names(spark, root, "v*/_SUCCESS")
+        if d[1:].isdigit()
     )
 
 
@@ -316,24 +326,22 @@ def _queue_ingest_apply(
     With batches whose post/job ids are disjoint — the normal crawl
     shape — sequential application telescopes to ONE ``add_posts`` of
     the union, which is the oracle the stream arm is checked against."""
-    import shutil
-
     from wpvectordb_spark.operators import queue_ops as Q
 
     bid = int(batch_id)
-    marker = os.path.join(root, "_last_batch")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            last = int(fh.read().strip() or -1)
-        if bid < last:
-            raise RuntimeError(
-                f"queue state dir {root} already holds batch {last} but "
-                f"the stream is processing batch {bid} — resuming a "
-                "state_path requires the ORIGINAL checkpoint_path so "
-                "batch ids continue (or a fresh state_path for a new "
-                "stream)"
-            )
-    versions = _queue_state_versions(root)
+    # one empty "_batch_<id>" marker per applied batch; the newest counts
+    marks = [
+        int(n[7:]) for n in fsutil.glob_names(spark, root, "_batch_*") if n[7:].isdigit()
+    ]
+    if marks and bid < max(marks):
+        raise RuntimeError(
+            f"queue state dir {root} already holds batch {max(marks)} but "
+            f"the stream is processing batch {bid} — resuming a "
+            "state_path requires the ORIGINAL checkpoint_path so "
+            "batch ids continue (or a fresh state_path for a new "
+            "stream)"
+        )
+    versions = _queue_state_versions(spark, root)
     if not versions:
         raise RuntimeError(
             f"queue state dir {root} has no committed v<N> state — "
@@ -342,36 +350,29 @@ def _queue_ingest_apply(
         )
     cur = versions[-1]
     jobs = batch_df.select(F.col("job_id"), F.col("post_id"))
-    prev = spark.read.parquet(os.path.join(root, f"v{cur}"))
+    prev = spark.read.parquet(f"{root}/v{cur}")
     new_state = Q.add_posts(prev, jobs, now)
-    new_state.write.mode("overwrite").parquet(os.path.join(root, f"v{cur + 1}"))
+    new_state.write.mode("overwrite").parquet(f"{root}/v{cur + 1}")
     # retention keeps ONE superseded version: a get_state() frame handed
     # out between batches stays readable across the next batch landing
-    shutil.rmtree(os.path.join(root, f"v{cur - 1}"), ignore_errors=True)
-    # marker last (tmp + atomic rename): a crash between the state
-    # write and the marker leaves marker == bid-1, and the replay of
-    # bid passes the < check — never a false refusal
-    tmp = marker + "__tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(bid))
-    os.replace(tmp, marker)
+    fsutil.delete(spark, f"{root}/v{cur - 1}")
+    # marker last, created then the older ones deleted (no overwrite in
+    # place): a crash before the create leaves the max marker at bid-1,
+    # and the replay of bid passes the < check — never a false refusal;
+    # a crash before the deletes leaves extra older markers, which the
+    # max ignores
+    fsutil.touch(spark, f"{root}/_batch_{bid}")
+    for m in marks:
+        if m != bid:
+            fsutil.delete(spark, f"{root}/_batch_{m}")
 
 
 def _state_root(state_path: str | None, prefix: str) -> str:
-    """Resolve a caller-supplied state directory (created if missing) or
-    a throwaway temp dir.  URIs are refused/normalized by the facades'
-    _check_local_path rule (single-slash forms like ``hdfs:/x``
-    included): the state lifecycle (listing, rename-based compaction
-    swaps, gc) runs through driver-local ``os`` calls, which silently
-    see a ``s3a://...`` string as a relative local path — use
-    Delta/Iceberg for object-store state."""
-    if state_path is None:
-        return tempfile.mkdtemp(prefix=prefix)
-    from wpvectordb_spark.table import _check_local_path
-
-    state_path = _check_local_path(state_path)
-    os.makedirs(state_path, exist_ok=True)
-    return state_path
+    """A caller-supplied state directory — any path Spark can write; the
+    state lifecycle (listing, rename-based compaction swaps, gc) goes
+    through ``fsutil``, and the first batch write creates it — or a
+    throwaway local temp dir."""
+    return tempfile.mkdtemp(prefix=prefix) if state_path is None else state_path
 
 
 def stream_dedup_ingest(
@@ -452,11 +453,7 @@ def stream_dedup_ingest(
     at leisure without hitting FileNotFound on gc'd deltas.
     """
     root = _state_root(state_path, "stream_dedup_state_")
-    sh_dir = os.path.join(root, "sh")
-    bands_dir = os.path.join(root, "bands")
-    pairs_dir = os.path.join(root, "pairs")
-    for d in (sh_dir, bands_dir, pairs_dir):
-        os.makedirs(d, exist_ok=True)
+    sh_dir, bands_dir, pairs_dir = (f"{root}/{d}" for d in ("sh", "bands", "pairs"))
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _dedup_ingest_apply(
@@ -490,8 +487,10 @@ _DEDUP_BANDS_SCHEMA = "doc_id long, band_id int, band_key string"
 _DEDUP_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
 
 
-def _list_state(root: str) -> tuple[int | None, str | None, list[tuple[int, str]]]:
-    """One directory listing -> (snapshot coverage, snapshot path, delta
+def _list_state(
+    spark: SparkSession, root: str
+) -> tuple[int | None, str | None, list[tuple[int, str]]]:
+    """One committed-dir glob -> (snapshot coverage, snapshot path, delta
     dirs as (batch_id, path)).  Crash debris is excluded two ways: by
     NAME (a compaction killed before its atomic rename leaves
     ``s<u>__tmp`` — not all-digits after the prefix; a kill after the
@@ -502,13 +501,9 @@ def _list_state(root: str) -> tuple[int | None, str | None, list[tuple[int, str]
     replay, but an external accessor listing it meanwhile would read
     partial rows as if they were committed state)."""
     snaps, deltas = [], []
-    for d in os.listdir(root):
-        if not os.path.exists(os.path.join(root, d, "_SUCCESS")):
-            continue
-        if d.startswith("b") and d[1:].isdigit():
-            deltas.append((int(d[1:]), os.path.join(root, d)))
-        elif d.startswith("s") and d[1:].isdigit():
-            snaps.append((int(d[1:]), os.path.join(root, d)))
+    for d in fsutil.glob_names(spark, root, "*/_SUCCESS"):
+        if d[1:].isdigit() and d[0] in "bs":
+            (deltas if d[0] == "b" else snaps).append((int(d[1:]), f"{root}/{d}"))
     upto, spath = max(snaps) if snaps else (None, None)
     return upto, spath, sorted(deltas)
 
@@ -519,7 +514,7 @@ def _read_state(
     """Read a snapshot + per-batch-delta state table; ``before_batch``
     limits to batches strictly earlier (the in-batch view).  An empty or
     not-yet-written table reads as an empty frame of the right schema."""
-    upto, spath, deltas = _list_state(root)
+    upto, spath, deltas = _list_state(spark, root)
     if upto is not None and before_batch is not None and upto >= before_batch:
         # compaction only ever folds batches < the in-flight one, so a
         # snapshot covering the requesting batch means the state dir was
@@ -623,16 +618,14 @@ def _compact_state(
 ) -> None:
     """Fold the delta dirs of batches strictly before ``before_batch``
     into one snapshot dir once ``compact_every`` of them have
-    accumulated.  Crash-safe swap (same pattern as table._write_snapshot):
+    accumulated.  Crash-safe swap (same pattern as fsutil.write_snapshot):
     write ``s<upto>__tmp``, atomic-rename to ``s<upto>``, THEN gc the
     superseded snapshot and the folded deltas — a kill in any gap leaves
     a readable layout because readers take the max-coverage snapshot and
     skip deltas it covers.  Idempotent under batch replay: the folded
     deltas are gone, so the re-run sees fewer than ``compact_every`` and
     skips."""
-    import shutil
-
-    upto, spath, deltas = _list_state(root)
+    upto, spath, deltas = _list_state(spark, root)
     foldable = [
         (b, p) for b, p in deltas if b < before_batch and (upto is None or b > upto)
     ]
@@ -643,31 +636,23 @@ def _compact_state(
     # (kill AFTER the rename but before that fold's own gc — readers
     # ignore them via the max-upto rule, but nothing else would ever
     # delete them and each such crash leaks a full state copy)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if d.endswith("__tmp"):
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("s") and d[1:].isdigit() and int(d[1:]) < (upto or 0):
-            shutil.rmtree(p, ignore_errors=True)
-        elif (
-            upto is not None
-            and d.startswith("b")
-            and d[1:].isdigit()
-            and int(d[1:]) <= upto
+    for d in fsutil.glob_names(spark, root, "*"):
+        n = int(d[1:]) if d[1:].isdigit() else None
+        if (
+            d.endswith("__tmp")
+            or (d[0] == "s" and n is not None and n < (upto or 0))
+            or (d[0] == "b" and n is not None and upto is not None and n <= upto)
         ):
-            shutil.rmtree(p, ignore_errors=True)
+            fsutil.delete(spark, f"{root}/{d}")
     new_upto = max(b for b, _ in foldable)
     merged = spark.read.schema(schema).parquet(
         *([spath] if spath else []), *[p for _, p in foldable]
     )
-    tmp = os.path.join(root, f"s{new_upto}__tmp")
-    final = os.path.join(root, f"s{new_upto}")
+    tmp, final = f"{root}/s{new_upto}__tmp", f"{root}/s{new_upto}"
     merged.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, final)
-    if spath:
-        shutil.rmtree(spath, ignore_errors=True)
-    for _, p in foldable:
-        shutil.rmtree(p, ignore_errors=True)
+    fsutil.rename(spark, tmp, final)
+    for p in ([spath] if spath else []) + [p for _, p in foldable]:
+        fsutil.delete(spark, p)
 
 
 def _dedup_ingest_apply(
@@ -841,8 +826,7 @@ def stream_ann_serve(
     apply the batched paths' standing candidate restriction to every
     micro-batch (e.g. serve only a tenant's rows)."""
     root = _state_root(state_path, "stream_ann_results_")
-    results_dir = os.path.join(root, "results")
-    os.makedirs(results_dir, exist_ok=True)
+    results_dir = f"{root}/results"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _ann_serve_apply(
@@ -978,8 +962,7 @@ def stream_corpus_profile(
     # profiles would silently miss
     stratum_types = {c: docs_stream.schema[c].dataType for c in stratum_cols}
     root = _state_root(state_path, "stream_profile_")
-    sums_dir = os.path.join(root, "sums")
-    os.makedirs(sums_dir, exist_ok=True)
+    sums_dir = f"{root}/sums"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _profile_ingest_apply(
@@ -1122,8 +1105,7 @@ def stream_anomaly_monitor(
     from wpvectordb_spark.operators import events as E
 
     root = _state_root(state_path, "stream_anomaly_")
-    counts_dir = os.path.join(root, "counts")
-    os.makedirs(counts_dir, exist_ok=True)
+    counts_dir = f"{root}/counts"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _anomaly_ingest_apply(
@@ -1255,8 +1237,7 @@ def stream_distinct_monitor(
     from wpvectordb_spark.operators import events as E
 
     root = _state_root(state_path, "stream_distinct_")
-    regs_dir = os.path.join(root, "registers")
-    os.makedirs(regs_dir, exist_ok=True)
+    regs_dir = f"{root}/registers"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _distinct_ingest_apply(
@@ -1367,8 +1348,7 @@ def stream_decontaminate_ingest(
     from wpvectordb_spark.functions import text as X
 
     root = _state_root(state_path, "stream_decon_state_")
-    results_dir = os.path.join(root, "results")
-    os.makedirs(results_dir, exist_ok=True)
+    results_dir = f"{root}/results"
     hold_hashes = (
         holdout.select(
             F.explode(X.shingle_hashes("text", shingle_k)).alias("h")
